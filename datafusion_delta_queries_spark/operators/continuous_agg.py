@@ -188,6 +188,8 @@ class ContinuousAggregate:
         self._minmax_cols: list[str] = []  # state cols recompute owns
         self._minmax_partial: list[str] = []  # exprs for that recompute
         self._mm_probe: list[str] = []  # batch probe exprs (_i{i}/_d{i})
+        self._mm_probe_cols: list[str] = []  # their columns
+        self._mm_probe_combine: list[str] = []  # probes through a combine
         self._mm_aux: list[dict] = []  # per-extremum repair metadata
         for i, a in enumerate(self.spec["aggs"]):
             if a["fn"] == "avg":
@@ -243,6 +245,11 @@ class ContinuousAggregate:
                         f"{pfn}(CASE WHEN _sign < 0 THEN ({a['arg']}) "
                         f"END) AS _d{i}"
                     )
+                    self._mm_probe_cols += [f"_i{i}", f"_d{i}"]
+                    self._mm_probe_combine += [
+                        f"{pfn}(_i{i}) AS _i{i}",
+                        f"{pfn}(_d{i}) AS _d{i}",
+                    ]
                     self._mm_aux.append(
                         {
                             "col": f"_p{i}",
@@ -278,9 +285,11 @@ class ContinuousAggregate:
             *[F.expr(e) for e in self._partial]
         )
 
-    def _combine_of(self, df: DataFrame) -> DataFrame:
+    def _combine_of(
+        self, df: DataFrame, extra: tuple | list = ()
+    ) -> DataFrame:
         return df.groupBy(*[df[n] for n in self.spec["key_names"]]).agg(
-            *[F.expr(e) for e in self._combine]
+            *[F.expr(e) for e in [*self._combine, *extra]]
         )
 
     # -- lifecycle -----------------------------------------------------
@@ -434,10 +443,15 @@ class ContinuousAggregate:
         is NOT threatened by any retraction in the batch (no retracted
         value ≤ the stored min / ≥ the stored max) merges
         ``least/greatest(stored, batch-insert extremum)``
-        algebraically — zero base access; only groups whose extremum
-        IS threatened recompute from the post-change base, restricted
-        to those groups by a semi join. Typical CDC (deletes rarely
-        hit the current extremum) therefore refreshes with work ∝ |Δ|.
+        algebraically; only groups whose extremum IS threatened
+        recompute from the post-change base, restricted to those
+        groups by a semi join. Whether any group is threatened is
+        decided inside the one guard action every signed refresh runs
+        anyway (NULL keys, negative counts), so the decision costs no
+        extra Spark action, and when no group is threatened
+        ``base_new_df`` is neither planned nor scanned — not even
+        touched as an object. Typical CDC (deletes rarely hit the
+        current extremum) therefore refreshes with work ∝ |Δ|.
         When a threatened group's recompute does run it reads that
         group's base slice; for the join subclass with DIM-side
         grouping keys the semi join restricts the dim branch, not the
@@ -472,8 +486,9 @@ class ContinuousAggregate:
         the plain class; the compiled join-fragment output for the
         join subclass — whichever side of the join the signs rode in
         on). Merges partials, applies the two-tier min/max repair
-        (``base_new_df`` = post-change base for the recompute tier),
-        and persists through the keyed upsert."""
+        (``base_new_df`` = post-change base, used only when the guard
+        finds a threatened group), and persists through the keyed
+        upsert."""
         keys = self.spec["key_names"]
         # One batch aggregation carries both the mergeable signed
         # partials and the min/max repair probes (_i{i}: inserted-rows
@@ -486,41 +501,55 @@ class ContinuousAggregate:
         # a dropped group is not corruption, it is covered by the drop.
         # (Predicates reference output key names, hence post-groupBy.)
         # Pinned: the aggregated change batch (tiny — one row per
-        # touched group) feeds the NULL-key guard, the merge, the
-        # min/max decision frame, and the touched-keys semi join —
-        # without the persist each of those actions re-scans the raw
-        # change relation.
+        # touched group) feeds the touched-keys semi join and the
+        # merge — without the persist each re-scans the raw change
+        # relation.
         delta_full = self._apply_retention(delta_full).persist()
         merged_p = None
-        merged = None
+        recomputed = None
         try:
-            probe_cols = [a["ins"] for a in self._mm_aux] + [
-                a["del"] for a in self._mm_aux
-            ]
-            delta_p = delta_full.drop(*probe_cols)
             stored = self._read_state()
-            touched_keys = delta_p.select(*keys)
-            touched = stored.join(touched_keys, keys, "left_semi")
+            touched = stored.join(delta_full.select(*keys), keys, "left_semi")
             # Persist: the merged maintenance plan feeds the guard,
             # the dead-group split, and the staged write — without
             # pinning it, each action re-runs the stored-state read +
-            # combine aggregate (3-4× work per streamed batch).
+            # combine aggregate (3-4× work per streamed batch). The
+            # min/max probes ride the combine: stored rows carry them
+            # as NULLs, and the batch's partial of every min/max slot
+            # is a typed NULL, so per group the combined _p{i} is the
+            # STORED extremum beside the batch's _i{i}/_d{i}.
             merged_p = self._combine_of(
-                touched.unionByName(delta_p)
+                touched.unionByName(delta_full, allowMissingColumns=True),
+                self._mm_probe_combine,
             ).persist()
-            merged = merged_p
-            # ONE guard action for both invariants (r17: this ran as
-            # two separate limit(1).count() jobs per refresh; in a
-            # per-batch maintenance loop guard jobs are pure overhead).
-            # A NULL grouping key in the batch survives the groupBy as
-            # its own group in `merged`, so both checks read the same
-            # persisted frame. Null-key priority preserved.
+            # A group is UNSAFE iff some retraction threatens some
+            # stored extremum: a retracted value ≤ stored min (resp. ≥
+            # stored max), or a retraction against missing/NULL stored
+            # state (inconsistent — recompute rather than guess). Each
+            # disjunct is IS-NOT-NULL guarded, so NOT(unsafe) is
+            # null-free and safe rows partition exactly.
+            unsafe_cond = " OR ".join(
+                f"({a['del']} IS NOT NULL AND ({a['col']} IS NULL "
+                f"OR {a['del']} {a['threat_op']} {a['col']}))"
+                for a in self._mm_aux
+            ) or "FALSE"
+            # ONE guard action decides everything: the NULL-key and
+            # negative-count invariants, and whether any group needs
+            # the min/max recompute. A NULL grouping key in the batch
+            # survives the groupBy as its own group in `merged_p`, so
+            # all three read the same persisted frame. Null-key
+            # priority preserved.
             null_cond = " OR ".join(f"`{n}` IS NULL" for n in keys)
-            guard = merged.agg(
-                F.max(F.expr(f"CASE WHEN {null_cond} THEN 1 ELSE 0 END"))
-                .alias("_nullkey"),
-                F.max(F.expr("CASE WHEN _rows < 0 THEN 1 ELSE 0 END"))
-                .alias("_neg"),
+            guard = merged_p.agg(
+                *[
+                    F.max(F.expr(f"CASE WHEN {cond} THEN 1 ELSE 0 END"))
+                    .alias(name)
+                    for name, cond in (
+                        ("_nullkey", null_cond),
+                        ("_neg", "_rows < 0"),
+                        ("_unsafe", unsafe_cond),
+                    )
+                ]
             ).collect()[0]
             if guard["_nullkey"]:
                 raise ValueError(
@@ -531,6 +560,7 @@ class ContinuousAggregate:
                     "change batch retracts rows a group never had "
                     "(negative live count) — refusing to corrupt the state"
                 )
+            merged = merged_p.drop(*self._mm_probe_cols)
             if self._minmax_cols:
                 if base_new_df is None:
                     raise ValueError(
@@ -538,75 +568,80 @@ class ContinuousAggregate:
                         "retract an extremum — pass base_new_df (the "
                         "post-change base) for delta-scoped recompute"
                     )
-                # Two-tier repair. Decision frame: per touched group,
-                # the batch's probe columns beside the STORED extrema
-                # (left join: a brand-new group has NULL stored state
-                # and is always safe — its extremum is the batch's).
-                dec = delta_full.select(*keys, *probe_cols).join(
-                    touched.select(*keys, *self._minmax_cols),
-                    keys,
-                    "left",
-                )
-                # A group is UNSAFE iff some retraction threatens some
-                # stored extremum: a retracted value ≤ stored min
-                # (resp. ≥ stored max), or a retraction against
-                # missing/NULL stored state (inconsistent — recompute
-                # rather than guess). Each disjunct is IS-NOT-NULL
-                # guarded, so NOT(unsafe) is null-free and safe rows
-                # partition exactly.
-                unsafe_cond = " OR ".join(
-                    f"({a['del']} IS NOT NULL AND ({a['col']} IS NULL "
-                    f"OR {a['del']} {a['threat_op']} {a['col']}))"
+                # Safe groups merge the stored extremum with the
+                # batch-insert one (a brand-new group has NULL stored
+                # state; least/greatest skip NULLs).
+                repair = {
+                    a["col"]: F.expr(
+                        f"{a['merge_fn']}({a['col']}, {a['ins']})"
+                    )
                     for a in self._mm_aux
-                )
-                safe_mm = dec.where(f"NOT ({unsafe_cond})").select(
-                    *keys,
-                    *[
-                        F.expr(
-                            f"{a['merge_fn']}({a['col']}, {a['ins']}) "
-                            f"AS {a['col']}"
-                        )
-                        for a in self._mm_aux
-                    ],
-                )
-                unsafe_keys = dec.where(unsafe_cond).select(*keys)
-                base = base_new_df
-                if self.spec["where"]:
-                    base = base.where(self.spec["where"])
-                base = self._project(base)
-                # Restrict via the EVALUATED grouping-key expressions
-                # (plans.sql_frontend._semi_on_keys), not output names:
-                # a raw-base semi join on the alias crashes for
-                # expression keys (no such column) and silently
-                # mis-restricts when the alias shadows a base column.
-                # Only the UNSAFE groups' slice is recomputed.
-                from ..plans.sql_frontend import _semi_on_keys
-
-                recomp_mm = (
-                    _semi_on_keys(base, unsafe_keys, self.spec["keys"],
-                                  keys)
-                    .groupBy(*self._key_cols)
-                    .agg(*[F.expr(e) for e in self._minmax_partial])
-                )
-                mm = safe_mm.unionByName(recomp_mm)
-                # Pinned: the repaired frame embeds the delta-scoped
-                # base recompute — without the persist the upsert's
-                # staging write AND the dead-group anti-join would
-                # each re-run that base scan.
-                merged = (
-                    merged.drop(*self._minmax_cols)
-                    .join(mm, keys, "left")
-                    .persist()
-                )
+                }
+                if guard["_unsafe"]:
+                    merged = recomputed = self._recompute_threatened(
+                        merged_p, unsafe_cond, repair, base_new_df
+                    )
+                else:
+                    # Every group is safe: finish from the persisted
+                    # frame — the base is neither planned nor scanned.
+                    merged = merged_p.withColumns(repair).drop(
+                        *self._mm_probe_cols
+                    )
             live = merged.where("_rows > 0")
             dead = merged.where("_rows = 0").select(*keys)
             self._upsert_state(live, deletes=dead)
         finally:
-            if merged is not None and merged is not merged_p:
-                merged.unpersist()
+            if recomputed is not None:
+                recomputed.unpersist()
             if merged_p is not None:
                 merged_p.unpersist()
             delta_full.unpersist()
+
+    def _recompute_threatened(
+        self,
+        merged_p: DataFrame,
+        unsafe_cond: str,
+        repair: dict,
+        base_new_df: DataFrame,
+    ) -> DataFrame:
+        """The min/max repair when the guard found a threatened group:
+        safe groups take the algebraic ``repair``, threatened groups
+        recompute from the post-change base, restricted to those groups
+        by a semi join. Returns the repaired frame, persisted (the
+        caller unpersists it)."""
+        keys = self.spec["key_names"]
+        safe = (
+            merged_p.where(f"NOT ({unsafe_cond})")
+            .withColumns(repair)
+            .select(*keys, *self._minmax_cols)
+        )
+        unsafe_keys = merged_p.where(unsafe_cond).select(*keys)
+        base = base_new_df
+        if self.spec["where"]:
+            base = base.where(self.spec["where"])
+        base = self._project(base)
+        # Restrict via the EVALUATED grouping-key expressions
+        # (plans.sql_frontend._semi_on_keys), not output names: a
+        # raw-base semi join on the alias crashes for expression keys
+        # (no such column) and silently mis-restricts when the alias
+        # shadows a base column. Only the UNSAFE groups' slice is
+        # recomputed.
+        from ..plans.sql_frontend import _semi_on_keys
+
+        recomp_mm = (
+            _semi_on_keys(base, unsafe_keys, self.spec["keys"], keys)
+            .groupBy(*self._key_cols)
+            .agg(*[F.expr(e) for e in self._minmax_partial])
+        )
+        # Pinned: the repaired frame embeds the delta-scoped base
+        # recompute — without the persist the upsert's staging write
+        # AND the dead-group anti-join would each re-run that base
+        # scan.
+        return (
+            merged_p.drop(*self._minmax_cols, *self._mm_probe_cols)
+            .join(safe.unionByName(recomp_mm), keys, "left")
+            .persist()
+        )
 
     def stream_into(self, source_dir: str, schema, checkpoint_dir: str):
         """Refresh this view continuously from a file-source stream.

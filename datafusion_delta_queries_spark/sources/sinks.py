@@ -81,6 +81,22 @@ def write_clustered(
     w.write.format(fmt).mode("overwrite").save(path)
 
 
+def _parquet_columns(path: str) -> list[str] | None:
+    """Column names of a parquet table directory from the footer of
+    one top-level part file (one write produced them all) — a
+    driver-side metadata read, no Spark job. None when there is no
+    such file (the caller then skips the check)."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path):
+        return None
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+            continue
+        return pq.read_schema(os.path.join(path, name)).names
+    return None
+
+
 def upsert(
     spark: SparkSession,
     target_path: str,
@@ -136,7 +152,17 @@ def upsert(
     # Explicit schema: a merge requires identical schemas anyway, and
     # schema inference on every state read costs a footer-read job
     # (~0.3 s per read at any scale; a catalogued production table
-    # serves its schema from metadata the same way).
+    # serves its schema from metadata the same way). An explicit-schema
+    # read would silently drop on-disk columns the batch lacks and
+    # NULL-fill the ones it adds, so the column sets are checked first.
+    if fmt == "parquet":
+        on_disk = _parquet_columns(target_path)
+        if on_disk is not None and set(on_disk) != set(updates.columns):
+            raise ValueError(
+                f"upsert(): target columns {sorted(on_disk)} at "
+                f"{target_path} differ from updates columns "
+                f"{sorted(updates.columns)}"
+            )
     target = spark.read.format(fmt).schema(updates.schema).load(target_path)
     merged = target.join(updates, key_cols, "left_anti").unionByName(updates)
     if deletes is not None:

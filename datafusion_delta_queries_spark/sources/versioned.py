@@ -46,27 +46,47 @@ _CHANGE_KINDS_BY_DIR: dict = {}
 _DIR_SCHEMA_MEMO: dict = {}
 
 
+def _has_unmappable_timestamps(pf) -> bool:
+    """True when a parquet footer holds a column whose footer type does
+    not say what Spark would infer: INT96 (Spark reads it as a
+    session-zone TIMESTAMP, arrow as a zone-less one) or a
+    nanosecond-precision TIMESTAMP (Spark reads it as BIGINT under
+    ``nanosAsLong``, or refuses it)."""
+    schema = pf.schema
+    for i in range(len(schema)):
+        col = schema.column(i)
+        if col.physical_type == "INT96":
+            return True
+        lt = col.logical_type
+        if lt.type == "TIMESTAMP" and '"nanoseconds"' in lt.to_json():
+            return True
+    return False
+
+
 def _dir_schema(d: str):
     """The Spark schema of one write-once commit dir, from the first
     part file's footer (one ``df.write`` produced every part, so they
     share a schema) — a driver-side metadata read, no Spark job. The
     memo key carries the dir mtime so a recreated table at the same
-    path re-reads. Returns None when anything is unusual (caller falls
-    back to an inferred read)."""
+    path re-reads. Returns None when anything is unusual, including
+    INT96 or nanosecond timestamp columns (caller falls back to an
+    inferred read)."""
     try:
         import pyarrow.parquet as pq
 
         from pyspark.sql.pandas.types import from_arrow_schema
 
         key = (d, os.stat(d).st_mtime_ns)
-        s = _DIR_SCHEMA_MEMO.get(key)
-        if s is not None:
-            return s
+        if key in _DIR_SCHEMA_MEMO:
+            return _DIR_SCHEMA_MEMO[key]
         for name in sorted(os.listdir(d)):
             if name.startswith(("_", ".")) or not name.endswith(".parquet"):
                 continue
-            pa_schema = pq.ParquetFile(os.path.join(d, name)).schema_arrow
-            s = from_arrow_schema(pa_schema, prefer_timestamp_ntz=True)
+            pf = pq.ParquetFile(os.path.join(d, name))
+            s = None
+            if not _has_unmappable_timestamps(pf):
+                s = from_arrow_schema(pf.schema_arrow,
+                                      prefer_timestamp_ntz=True)
             _DIR_SCHEMA_MEMO[key] = s
             return s
         return None
@@ -79,10 +99,12 @@ def _merged_commit_schema(dirs: list[str]):
     the result ``mergeSchema=true`` would infer, computed from footers
     on the driver instead of a per-read Spark job (~0.4 s per read,
     and versioned lifecycles read many times). First-seen field order
-    (mergeSchema's order for additive evolution); None on any type
-    conflict or unreadable footer, and the caller falls back to the
-    inferred ``mergeSchema`` read — behavior unchanged, just slower."""
-    from pyspark.sql.types import StructType
+    (mergeSchema's order for additive evolution), every field nullable
+    (a predated dir NULL-fills the fields it lacks, and mergeSchema's
+    union is nullable too); None on any type conflict or unusable
+    footer, and the caller falls back to the inferred ``mergeSchema``
+    read — behavior unchanged, just slower."""
+    from pyspark.sql.types import StructField, StructType
 
     fields: list = []
     by_name: dict = {}
@@ -94,10 +116,24 @@ def _merged_commit_schema(dirs: list[str]):
             prev = by_name.get(f.name)
             if prev is None:
                 by_name[f.name] = f
-                fields.append(f)
+                fields.append(StructField(f.name, f.dataType, True,
+                                          f.metadata))
             elif prev.dataType != f.dataType:
                 return None  # non-additive evolution: let Spark decide
     return StructType(fields) if fields else None
+
+
+def _read_dirs(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """One scan over write-once dirs (commits or a checkpoint) under
+    their additive-evolution union schema: taken from the footers when
+    ``_merged_commit_schema`` can (no Spark job), else inferred by a
+    ``mergeSchema`` read. Without the union a later commit's added
+    columns would be dropped; rows of a dir that predates a column read
+    NULL in it."""
+    merged = _merged_commit_schema(paths)
+    if merged is not None:
+        return spark.read.schema(merged).parquet(*paths)
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
 def _kinds_from_footers(d: str):
@@ -171,18 +207,7 @@ class VersionedTable:
         paths = [self._version_dir(v) for v in versions]
         if not paths:
             raise ValueError(f"no versions selected from {self.root}")
-        # mergeSchema: a later commit may ADD columns (additive schema
-        # evolution, the lakehouse norm); without it the scan would pick
-        # one file's schema and silently drop the others' extra columns.
-        # Earlier versions' rows surface NULL for columns they predate.
-        # The union schema is computed from footers on the driver when
-        # possible (commits are write-once, so per-dir schemas memoize)
-        # — the explicit-schema read skips the per-read footer job and
-        # fills predated columns with NULL exactly as mergeSchema does.
-        merged = _merged_commit_schema(paths)
-        if merged is not None:
-            return spark.read.schema(merged).parquet(*paths)
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return _read_dirs(spark, paths)
 
     def snapshot(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Time travel: table state as of ``version`` (default latest)."""
@@ -479,14 +504,10 @@ class CdfVersionedTable:
         paths = [self._version_dir(v) for v in versions]
         if not paths:
             raise ValueError(f"no versions selected from {self.root}")
-        # mergeSchema, as in VersionedTable._read: additive evolution —
-        # the signed fold then groups old rows with NULL in the new
-        # columns, which is exactly the evolved multiset semantics.
-        # Same driver-side union-schema fast path as VersionedTable.
-        merged = _merged_commit_schema(paths)
-        if merged is not None:
-            return spark.read.schema(merged).parquet(*paths)
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        # Union schema, as in VersionedTable._read: the signed fold
+        # then groups old rows with NULL in the new columns, which is
+        # exactly the evolved multiset semantics.
+        return _read_dirs(spark, paths)
 
     def _change_kinds(self, spark: SparkSession, versions: list[int]) -> set:
         """Distinct ``_change_type`` tags across ``versions``. Memoized
@@ -667,15 +688,11 @@ class CdfVersionedTable:
             ins = self._read(spark, tail).drop(CHANGE_TYPE)
             if base_ck is None:
                 return ins
-            ck = spark.read.option("mergeSchema", "true").parquet(
-                self._ckpt_dir(base_ck)
-            )
+            ck = _read_dirs(spark, [self._ckpt_dir(base_ck)])
             return ck.unionByName(ins, allowMissingColumns=True)
         parts: list[DataFrame] = []
         if base_ck is not None:
-            ck = spark.read.option("mergeSchema", "true").parquet(
-                self._ckpt_dir(base_ck)
-            )
+            ck = _read_dirs(spark, [self._ckpt_dir(base_ck)])
             if not tail:
                 return ck  # the checkpoint IS the state as of `version`
             parts.append(ck.withColumn(SIGN, F.lit(1)))

@@ -239,6 +239,115 @@ def test_signed_minmax_threatened_group_recomputes_runner_up(
     assert got == {"a": (2, 5.0, 9.0), "b": (3, 2.0, 6.0)}
 
 
+class _Untouchable:
+    """A stand-in base table whose every attribute access raises: a
+    refresh that so much as plans a read of it fails."""
+
+    def __getattribute__(self, name):
+        raise AssertionError(f"base_new_df.{name} accessed")
+
+
+def test_signed_minmax_safe_batch_never_touches_the_base(spark, tmp_path):
+    """When no retraction threatens a stored extremum, the min/max
+    repair is decided inside the guard action and finished from the
+    merged state: ``base_new_df`` is neither planned nor scanned, so
+    an object that raises on any use goes through untouched."""
+    t0 = spark.createDataFrame(
+        [("a", 1.0), ("a", 5.0), ("a", 9.0), ("b", 2.0), ("b", 6.0)],
+        "k: string, v: double",
+    )
+    view = ContinuousAggregate(
+        spark, str(tmp_path / "state"),
+        "SELECT k, count(*) AS n, min(v) AS lo, max(v) AS hi "
+        "FROM t GROUP BY k",
+    )
+    view.initialize(t0)
+    batch = spark.createDataFrame(
+        [("a", 5.0, "delete"), ("b", 7.0, "insert"), ("b", 0.5, "insert"),
+         ("c", 3.0, "insert")],
+        "k: string, v: double, _change_type: string",
+    )
+    view.refresh_signed(batch, base_new_df=_Untouchable())
+    got = {r["k"]: (r["n"], r["lo"], r["hi"]) for r in view.read().collect()}
+    assert got == {"a": (2, 1.0, 9.0), "b": (4, 0.5, 7.0), "c": (1, 3.0, 3.0)}
+
+
+def _tiny_join_view(spark, tmp_path):
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousJoinAggregate,
+    )
+
+    orders = spark.createDataFrame(
+        [(1, "HIGH"), (2, "HIGH"), (3, "LOW")],
+        "o_orderkey: bigint, o_orderpriority: string",
+    )
+    fact = spark.createDataFrame(
+        [(1, 20, 10.0), (1, 20, 50.0), (2, 20, 30.0), (3, 20, 5.0),
+         (3, 20, 8.0), (3, 20, 40.0)],
+        "l_orderkey: bigint, l_quantity: int, l_extendedprice: double",
+    )
+    view = ContinuousJoinAggregate(
+        spark, str(tmp_path / "state"),
+        "SELECT o.o_orderpriority, count(*) AS n_lines, "
+        "min(l.l_extendedprice) AS lo, max(l.l_extendedprice) AS hi "
+        "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey "
+        "WHERE l.l_quantity > 10 GROUP BY o.o_orderpriority",
+        fact="lineitem", dims={"orders": orders},
+    )
+    view.initialize(fact)
+    return view, fact
+
+
+def _tiny_join_rows(view):
+    return {
+        r["o_orderpriority"]: (r["n_lines"], r["lo"], r["hi"])
+        for r in view.read().collect()
+    }
+
+
+def test_join_view_safe_batch_never_touches_the_base(spark, tmp_path):
+    """The join subclass shares the guard-decided repair: a batch
+    whose retractions sit strictly inside every touched group's
+    [min, max] envelope refreshes without touching ``base_new_df``."""
+    view, _ = _tiny_join_view(spark, tmp_path)
+    batch = spark.createDataFrame(
+        [(2, 20, 30.0, "delete"), (3, 20, 8.0, "update_preimage"),
+         (3, 20, 9.0, "update_postimage"), (1, 20, 60.0, "insert")],
+        "l_orderkey: bigint, l_quantity: int, l_extendedprice: double, "
+        "_change_type: string",
+    )
+    view.refresh_signed(batch, base_new_df=_Untouchable())
+    assert _tiny_join_rows(view) == {
+        "HIGH": (3, 10.0, 60.0), "LOW": (3, 5.0, 40.0)
+    }
+
+
+def test_join_view_mixed_batch_repairs_each_group(spark, tmp_path):
+    """One batch, two groups: LOW's stored min is retracted (threatened
+    — recomputed from the post-change base, runner-up promoted), HIGH
+    only gains rows inside its envelope plus a new max (safe — merged
+    algebraically). Each group's extrema come out exact."""
+    view, fact = _tiny_join_view(spark, tmp_path)
+    batch = spark.createDataFrame(
+        [(3, 20, 5.0, "delete"), (1, 20, 70.0, "insert"),
+         (2, 20, 30.0, "delete")],
+        "l_orderkey: bigint, l_quantity: int, l_extendedprice: double, "
+        "_change_type: string",
+    )
+    base_new = fact.where(
+        "NOT (l_extendedprice IN (5.0, 30.0))"
+    ).unionByName(
+        spark.createDataFrame(
+            [(1, 20, 70.0)],
+            "l_orderkey: bigint, l_quantity: int, l_extendedprice: double",
+        )
+    )
+    view.refresh_signed(batch, base_new_df=base_new)
+    assert _tiny_join_rows(view) == {
+        "HIGH": (3, 10.0, 70.0), "LOW": (2, 8.0, 40.0)
+    }
+
+
 def test_signed_minmax_duplicated_extremum_delete_is_exact(
     spark, tmp_path
 ):

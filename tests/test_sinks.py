@@ -232,6 +232,37 @@ def test_upsert_is_idempotent(spark, tmp_path):
     assert first == second == [(1, "a"), (2, "B"), (3, "c"), (4, "D")]
 
 
+def test_upsert_rejects_column_set_mismatch(spark, tmp_path):
+    """The target is read with the batch's schema, which would silently
+    drop an on-disk column the batch lacks and NULL-fill one it adds;
+    a mismatch of the two column sets raises instead, naming both
+    sides, and leaves the target untouched."""
+    path = str(tmp_path / "t4")
+    spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0)], "k: bigint, v: string, w: double"
+    ).write.parquet(path)
+    narrower = spark.createDataFrame([(2, "B")], "k: bigint, v: string")
+    with pytest.raises(ValueError, match=r"\['k', 'v', 'w'\].*\['k', 'v'\]"):
+        upsert(spark, path, narrower, ["k"])
+    wider = spark.createDataFrame(
+        [(2, "B", 2.5, 9)], "k: bigint, v: string, w: double, x: int"
+    )
+    with pytest.raises(ValueError, match="'x'"):
+        upsert(spark, path, wider, ["k"])
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a", 1.0), (2, "b", 2.0)]
+    # same columns in another order merge as before
+    reordered = spark.createDataFrame(
+        [(2.5, "B", 2)], "w: double, v: string, k: bigint"
+    )
+    upsert(spark, path, reordered, ["k"])
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(path).select("k", "v", "w")
+        .collect()
+    )
+    assert got == [(1, "a", 1.0), (2, "B", 2.5)]
+
+
 # -- partition-pruned upsert -------------------------------------------
 
 def _part_table(spark, tmp_path):

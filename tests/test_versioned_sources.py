@@ -334,6 +334,92 @@ def test_checkpointed_snapshot_reads_only_checkpoint_plus_tail(
     assert files1 and all("ckpt=00000001" in f for f in files1)
 
 
+def _jobs_while(spark, build):
+    """(result of ``build()``, ids of the Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot build")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpointed_snapshot_builds_without_a_spark_job(spark, tmp_path):
+    """Building a snapshot over a checkpoint reads every schema from
+    parquet footers on the driver: zero Spark jobs at the checkpoint,
+    over an insert-only tail and over a folded tail — also when a
+    column was added after the checkpoint, whose predated rows still
+    read NULL in it."""
+    t = CdfVersionedTable(str(tmp_path / "log"))
+    t.write_version(_mk_cdf(spark, [("a", 1, "insert"), ("b", 2, "insert")]))
+    t.write_version(_mk_cdf(spark, [("a", 1, "delete"), ("c", 3, "insert")]))
+    t.checkpoint(spark, 1)
+    evolved = "k: string, v: int, w: double, _change_type: string"
+    t.write_version(spark.createDataFrame([("d", 4, 7.5, "insert")], evolved))
+    t.write_version(spark.createDataFrame(
+        [("c", 3, None, "delete"), ("e", 5, 1.0, "insert")], evolved
+    ))
+    want = {
+        1: [("b", 2), ("c", 3)],
+        2: [("b", 2, None), ("c", 3, None), ("d", 4, 7.5)],
+        3: [("b", 2, None), ("d", 4, 7.5), ("e", 5, 1.0)],
+    }
+    for v, rows in want.items():
+        snap, jobs = _jobs_while(spark, lambda: t.snapshot(spark, v))
+        assert jobs == [], (v, jobs)
+        assert sorted(tuple(r) for r in snap.collect()) == rows, v
+
+
+def test_footer_schema_is_nullable_and_skips_unmappable_timestamps(
+    tmp_path,
+):
+    """The footer-derived union schema is nullable in every field, as
+    mergeSchema's is (a predated dir NULL-fills what it lacks), and a
+    dir with INT96 or nanosecond timestamps yields no footer schema —
+    Spark's inference maps those differently, so they take the
+    inferred read."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_delta_queries_spark.sources.versioned import (
+        _dir_schema,
+        _merged_commit_schema,
+    )
+
+    def put(name, table, **kw):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(table, str(d / "part-0.parquet"), **kw)
+        return str(d)
+
+    required = pa.schema([pa.field("id", pa.int64(), nullable=False)])
+    d0 = put("v0", pa.table({"id": [1]}, schema=required))
+    d1 = put("v1", pa.table(
+        {"id": [2], "x": [3]},
+        schema=required.append(pa.field("x", pa.int64(), nullable=False)),
+    ))
+    merged = _merged_commit_schema([d0, d1])
+    assert merged.fieldNames() == ["id", "x"]
+    assert all(f.nullable for f in merged.fields)
+
+    ts = [datetime.datetime(2024, 1, 1)]
+    int96 = put("int96", pa.table({"t": pa.array(ts, pa.timestamp("us"))}),
+                use_deprecated_int96_timestamps=True)
+    nanos = put("nanos", pa.table({"t": pa.array(ts, pa.timestamp("ns"))}),
+                version="2.6")
+    micros = put("micros", pa.table({"t": pa.array(ts, pa.timestamp("us"))}))
+    assert _dir_schema(int96) is None
+    assert _dir_schema(nanos) is None
+    assert _dir_schema(micros) is not None
+    assert _merged_commit_schema([micros, int96]) is None
+
+
 def test_vacuum_removes_covered_commits_and_guards_reads(
     spark, three_version_log
 ):
